@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.iterate import frontier_fixpoint
+
 
 def transitive_closure(
     edges: DataFrame,
@@ -25,44 +27,32 @@ def transitive_closure(
 ) -> DataFrame:
     """All (src, dst, hops) pairs reachable in 1..max_hops steps, with
     ``hops`` = minimum hop count. ``include_zero`` adds (v, v, 0) for every
-    vertex (the ``*0..`` variant).
+    vertex (the ``*0..`` variant); ``max_hops=0`` reaches nothing beyond
+    those zero-hop rows.
 
     Each round joins the frontier (pairs found last round) against the base
-    edge set, anti-joins out already-reached pairs, and checkpoints ONLY
-    the new chunk — the accumulated result stays a lazy union of the
-    per-hop checkpointed chunks (flat lineage, each leaf a checkpoint
-    scan), so no round rewrites the whole reached set. Frontier emptiness
-    comes from an observe metric gathered during the chunk's checkpoint
-    job: one job per hop, total materialized bytes O(result), not
-    O(result x hops).
+    edge set and anti-joins out already-reached pairs; the frontier driver
+    checkpoints only the new chunk and stops at the first empty round
+    (:func:`~cartography_spark.operators.iterate.frontier_fixpoint`): one
+    job per hop, total materialized bytes O(result), not O(result x hops).
     """
-    from functools import reduce
-
-    from pyspark.sql import Observation
-
+    if max_hops < 0:
+        raise ValueError(f"transitive_closure requires max_hops >= 0, got {max_hops}")
     base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     base = base.localCheckpoint(eager=True)  # probed every round (join + anti)
-    chunks = [base.withColumn("hops", F.lit(1))]
-    frontier = chunks[0]
 
-    for hop in range(2, max_hops + 1):
+    def _expand(frontier: DataFrame, reached: DataFrame, k: int) -> DataFrame:
         grown = (
             frontier.alias("f")
             .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
             .select(F.col("f.src").alias("src"), F.col("b.dst").alias("dst"))
             .distinct()
-            .withColumn("hops", F.lit(hop))
+            .withColumn("hops", F.lit(k + 1))
         )
-        seen = reduce(DataFrame.unionByName, [c.select("src", "dst") for c in chunks])
-        new_pairs = grown.join(seen, ["src", "dst"], "left_anti")
-        obs = Observation()
-        new_pairs = new_pairs.observe(obs, F.count("*").alias("n")).localCheckpoint(eager=True)
-        if obs.get["n"] == 0:
-            break
-        chunks.append(new_pairs)
-        frontier = new_pairs
+        return grown.join(reached.select("src", "dst"), ["src", "dst"], "left_anti")
 
-    reached = reduce(DataFrame.unionByName, chunks)
+    one_hop = base.withColumn("hops", F.lit(1)).filter(F.lit(max_hops > 0))
+    reached = frontier_fixpoint(one_hop, _expand, max_rounds=max_hops - 1)
 
     if include_zero:
         verts = base.select("src").union(base.select(F.col("dst").alias("src"))).distinct()

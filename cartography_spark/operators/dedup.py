@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.iterate import label_fixpoint
 from cartography_spark.session import shuffle_partition_count
 
 
@@ -84,59 +85,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
             F.col("g.group_size").alias("group_size"),
         )
     )
-
-
-def shingle_word_sets(
-    sh: DataFrame, id_col: str = "doc_id", max_words: int = 128
-) -> tuple[DataFrame | None, int]:
-    """Per-doc exact shingle BITSET for candidate verification: returns
-    ``(sets, nwords)`` where ``sets`` has (id_col, __sz, __w0..__w{n-1})
-    — the doc's distinct-shingle count and its shingle set packed into
-    ``nwords`` scalar long columns over a dense shingle-id space (any
-    deterministic order; only id-compactness matters). Exact:
-    sum_j bit_count(a_wj & b_wj) == |A ∩ B|. Scalar long columns keep the
-    per-pair popcount in whole-stage codegen (array/HOF encodings of the
-    same predicate measured ~2.7 µs/pair interpreted — r9 ngram note).
-
-    Returns ``(None, 0)`` when the distinct vocabulary exceeds
-    ``max_words * 64`` — the caller keeps its array-set verification
-    (a bitset over an unbounded word-n-gram vocab would waste
-    vocab/8 bytes per doc and a giant unrolled expression)."""
-    from pyspark.sql import Window
-
-    sh = sh.localCheckpoint(eager=True)  # consumed by the vocab + the sets
-    vocab = sh.select("shingle").distinct()
-    vocab = vocab.localCheckpoint(eager=True)
-    vocab_size = vocab.count()
-    nwords = (vocab_size + 63) // 64
-    if vocab_size == 0 or nwords > max_words:
-        return None, 0
-    if vocab_size <= 1_000_000:
-        ided_vocab = vocab.withColumn(
-            "__sid", F.row_number().over(Window.orderBy("shingle")) - 1
-        )
-    else:  # unreachable under max_words=128, kept for safety with big caps
-        ided_vocab = ordered_dense_ids(vocab, ["shingle"], "__sid")
-    ided = sh.join(F.broadcast(ided_vocab), "shingle")
-    word_bits = ided.groupBy(id_col, (F.col("__sid") / 64).cast("int").alias("__w")).agg(
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__sid % 64 AS INT))")).alias("__bits"),
-        F.count("*").alias("__n"),
-    )
-    sets = (
-        word_bits.groupBy(id_col)
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("__w", "__bits"))).alias("__m"),
-            F.sum("__n").alias("__sz"),
-        )
-        .select(
-            id_col, "__sz",
-            *[
-                F.coalesce(F.col("__m")[j], F.lit(0).cast("bigint")).alias(f"__w{j}")
-                for j in range(nwords)
-            ],
-        )
-    )
-    return sets, nwords
 
 
 def _ngram_jaccard_dense(
@@ -667,7 +615,6 @@ def cluster_min_label(
     vertices: DataFrame,
     max_iter: int = 6,
     id_col: str = "doc_id",
-    hop_fusion: bool = False,
 ) -> DataFrame:
     """Near-dup pair sets -> clusters: bounded min-label propagation.
 
@@ -676,11 +623,11 @@ def cluster_min_label(
     ``max_iter`` rounds give exact connected components for any component
     whose radius from its minimum-id vertex is <= max_iter — near-dup
     clusters are dense (LSH/Jaccard pairs), so small bounds converge.
-    Each round is one shuffle (join + min-agg); lineage is checkpointed per
-    round. Returns (id, cluster, keep) — keep marks the canonical doc.
+    Each round is one shuffle (join + min-agg) and one checkpoint job
+    (:func:`~cartography_spark.operators.iterate.label_fixpoint`), which
+    stops at the first round that changes no label. Returns
+    (id, cluster, keep) — keep marks the canonical doc.
     """
-    from pyspark.sql import Observation
-
     und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
@@ -694,9 +641,6 @@ def cluster_min_label(
     # (guide §2.4; same rewrite as cluster_min_label_bipartite)
     und = und.repartition(n_part, "dst").dropDuplicates(["src", "dst"])
     und.persist()
-    labels = vertices.select(F.col(id_col).alias("v")).distinct().withColumn(
-        "lbl", F.col("v")
-    )
 
     def _hop(lbls: DataFrame) -> DataFrame:
         neighbor_min = (
@@ -704,58 +648,11 @@ def cluster_min_label(
             .groupBy(F.col("src").alias("v"))
             .agg(F.min("lbl").alias("nlbl"))
         )
-        return lbls.join(neighbor_min, "v", "left").select(
-            F.col("v"),
-            F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
-        )
+        return _relabel(lbls, neighbor_min)
 
-    # Hop fusion, shallow-graph-aware: the label after hop k is min over
-    # the k-hop neighborhood either way, and each checkpoint+observe is a
-    # full Spark job whose fixed scheduling cost dominates the small label
-    # frame. The FIRST block runs a single hop — near-dup components are
-    # usually stars that converge in one hop, and a fused first block
-    # would burn a second hop just to observe stability. Blocks after the
-    # first fuse two hops, halving the job count on deep chains while the
-    # per-hop semantics (and the max_iter-hop truncation the oracle\'s
-    # recursive CTE states) stay bit-identical.
-    remaining = max_iter
-    n_block = 0
-    while remaining > 0:
-        # Default schedule is PER-HOP (1,1,1,...): interleaved A/Bs at
-        # sf0.1 AND sf1 measured the r4 fused 1,1,2,2 schedule 15-20%
-        # SLOWER with non-overlapping run ranges — the dup graphs need
-        # ~3 hops, so every fused block past the front runs one wasted
-        # full-data hop after the fixed point, and per-hop's extra
-        # barrier is cheaper than that hop (see SCALE.md round-5).
-        # hop_fusion=True keeps the fused shape available for graphs
-        # whose barrier cost dominates per-hop data cost.
-        step = 1 if (n_block < 2 or not hop_fusion) else min(2, remaining)
-        n_block += 1
-        block = labels
-        for _ in range(step):
-            block = _hop(block)
-        remaining -= step
-        stepped = block.join(
-            labels.select("v", F.col("lbl").alias("prev")), "v"
-        )
-        # convergence via observe: the changed-count aggregates during the
-        # SAME job that materializes the checkpoint (one job per block, no
-        # extra count() action); no change across a whole block means the
-        # fixed point was reached, so breaking keeps results identical to
-        # the fixed-round oracle
-        obs = Observation()
-        stepped = stepped.observe(
-            obs, F.count_if(F.col("lbl") != F.col("prev")).alias("changed")
-        ).localCheckpoint(eager=True)
-        labels = stepped.drop("prev")
-        if obs.get["changed"] == 0:
-            break
-    und.unpersist()  # labels is checkpointed per block — safe to release
-    return labels.select(
-        F.col("v").alias(id_col),
-        F.col("lbl").alias("cluster"),
-        (F.col("v") == F.col("lbl")).alias("keep"),
-    )
+    labels = label_fixpoint(_initial_labels(vertices, id_col), _hop, max_iter)
+    und.unpersist()  # labels is checkpointed per round — safe to release
+    return _clusters(labels, id_col)
 
 
 def cluster_min_label_bipartite(
@@ -764,7 +661,6 @@ def cluster_min_label_bipartite(
     max_iter: int = 6,
     id_col: str = "doc_id",
     bucket_col: str = "bucket",
-    hop_fusion: bool = False,
 ) -> DataFrame:
     """Min-label clustering over BUCKET MEMBERSHIPS instead of pairs —
     star contraction on the hypergraph whose hyperedges are LSH buckets.
@@ -781,12 +677,10 @@ def cluster_min_label_bipartite(
     pair-based form and both converge to the identical fixed point the
     oracle's recursive CTE describes.
 
-    Per round: two joins + two min-aggregates over the membership rows;
-    convergence read from a Dataset.observe metric during the round's
-    checkpoint job (one job per round).
+    Per round: two joins + two min-aggregates over the membership rows,
+    then the same one-job checkpoint and early exit as
+    :func:`cluster_min_label`.
     """
-    from pyspark.sql import Observation
-
     n_part = shuffle_partition_count(memberships.sparkSession)
     # repartition FIRST, dedup second: HashPartitioning(mv) satisfies the
     # (mv, mb) clustering the dedup aggregate needs, so the distinct runs
@@ -799,9 +693,6 @@ def cluster_min_label_bipartite(
         .dropDuplicates(["mv", "mb"])
     )
     mem.persist()
-    labels = vertices.select(F.col(id_col).alias("v")).distinct().withColumn(
-        "lbl", F.col("v")
-    )
 
     def _hop(lbls: DataFrame) -> DataFrame:
         bmin = (
@@ -814,40 +705,30 @@ def cluster_min_label_bipartite(
             .groupBy(F.col("mv").alias("v"))
             .agg(F.min("blbl").alias("nlbl"))
         )
-        return lbls.join(nmin, "v", "left").select(
-            "v",
-            F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
-        )
+        return _relabel(lbls, nmin)
 
-    # Shallow-aware hop fusion (see cluster_min_label): single-hop first
-    # block — stars converge in one hop and must not pay a fused second —
-    # then two pair-graph hops per materialized block on deep chains.
-    remaining = max_iter
-    n_block = 0
-    while remaining > 0:
-        # Default schedule is PER-HOP (1,1,1,...): interleaved A/Bs at
-        # sf0.1 AND sf1 measured the r4 fused 1,1,2,2 schedule 15-20%
-        # SLOWER with non-overlapping run ranges — the dup graphs need
-        # ~3 hops, so every fused block past the front runs one wasted
-        # full-data hop after the fixed point, and per-hop's extra
-        # barrier is cheaper than that hop (see SCALE.md round-5).
-        # hop_fusion=True keeps the fused shape available for graphs
-        # whose barrier cost dominates per-hop data cost.
-        step = 1 if (n_block < 2 or not hop_fusion) else min(2, remaining)
-        n_block += 1
-        block = labels
-        for _ in range(step):
-            block = _hop(block)
-        remaining -= step
-        stepped = block.join(labels.select("v", F.col("lbl").alias("prev")), "v")
-        obs = Observation()
-        stepped = stepped.observe(
-            obs, F.count_if(F.col("lbl") != F.col("prev")).alias("changed")
-        ).localCheckpoint(eager=True)
-        labels = stepped.drop("prev")
-        if obs.get["changed"] == 0:
-            break
+    labels = label_fixpoint(_initial_labels(vertices, id_col), _hop, max_iter)
     mem.unpersist()
+    return _clusters(labels, id_col)
+
+
+def _initial_labels(vertices: DataFrame, id_col: str) -> DataFrame:
+    """(v, lbl) with every vertex labelled by its own id."""
+    return vertices.select(F.col(id_col).alias("v")).distinct().withColumn("lbl", F.col("v"))
+
+
+def _relabel(lbls: DataFrame, neighbor_min: DataFrame) -> DataFrame:
+    """One min-label hop: each vertex keeps the smaller of its label and
+    its neighbors' minimum (``nlbl``), carrying the old label as ``prev``
+    for the fixpoint driver's changed-count."""
+    return lbls.join(neighbor_min, "v", "left").select(
+        "v",
+        F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
+        F.col("lbl").alias("prev"),
+    )
+
+
+def _clusters(labels: DataFrame, id_col: str) -> DataFrame:
     return labels.select(
         F.col("v").alias(id_col),
         F.col("lbl").alias("cluster"),
@@ -1023,7 +904,6 @@ def minhash_cluster_collapsed(
     max_iter: int = 6,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hop_fusion: bool = False,
 ) -> DataFrame:
     """The 100 TB-sane MinHash dedup contract: (id, cluster, keep) — O(N)
     output — instead of the O(pairs) candidate list.
@@ -1058,18 +938,8 @@ def minhash_cluster_collapsed(
         idmap.select(F.col("rep").alias(id_col)),
         max_iter=max_iter,
         id_col=id_col,
-        hop_fusion=hop_fusion,
     )
-    return (
-        idmap.join(
-            cl.select(F.col(id_col).alias("rep"), "cluster"), "rep"
-        )
-        .select(
-            F.col(id_col),
-            "cluster",
-            (F.col(id_col) == F.col("cluster")).alias("keep"),
-        )
-    )
+    return _expand_reps(idmap, cl, id_col)
 
 
 def embedding_cluster_collapsed(
@@ -1113,14 +983,15 @@ def embedding_cluster_collapsed(
     cl = cluster_min_label(
         pairs, idmap.select(F.col("rep").alias(id_col)), max_iter=max_iter, id_col=id_col
     )
-    return (
-        idmap.join(cl.select(F.col(id_col).alias("rep"), "cluster"), "rep")
-        .select(
-            F.col(id_col),
-            "cluster",
-            (F.col(id_col) == F.col("cluster")).alias("keep"),
-        )
-    )
+    return _expand_reps(idmap, cl, id_col)
+
+
+def _expand_reps(idmap: DataFrame, reps_clustered: DataFrame, id_col: str) -> DataFrame:
+    """(id, cluster, keep) for every doc of the (id, rep) map: each doc
+    takes its exact-copy representative's cluster (one linear join)."""
+    return idmap.join(
+        reps_clustered.select(F.col(id_col).alias("rep"), "cluster"), "rep"
+    ).select(F.col(id_col), "cluster", (F.col(id_col) == F.col("cluster")).alias("keep"))
 
 
 def shingle_containment_pairs(

@@ -26,9 +26,8 @@ Scale notes (100 TB / 1000 executors):
 - ``connected_components``: min-label propagation with path-halving
   (each round also jumps labels through their parent's label), so chains
   converge in O(log diameter) rounds instead of O(diameter). Each round
-  is two hash joins + one aggregation; convergence is read from
-  ``Dataset.observe`` metrics gathered during the round's checkpoint
-  job, so no separate count() action runs per round.
+  is two hash joins + one aggregation and one checkpoint job
+  (``operators/iterate.py``).
 
 Every operator that persists its static edge side releases the cache
 before returning (after a final localCheckpoint bounds the returned
@@ -40,9 +39,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.iterate import frontier_fixpoint, label_fixpoint, round_barrier
 from cartography_spark.session import finalize_iterative, shuffle_partition_count
 
 PR_SCALE = 1_000_000_000_000  # rank fixed-point scale (1e12)
+LPA_CHECKPOINT_EVERY = 4  # label_propagation rounds between lineage cuts
 
 
 def _persist_copartitioned(df: DataFrame, key: str) -> DataFrame:
@@ -156,29 +157,21 @@ def bfs_distances(edges: DataFrame, source: int, max_depth: int = 6) -> DataFram
     # re-executing the whole upstream edge build once per level — 6x the
     # trade-graph source joins at max_depth=6)
     edges = _persist_copartitioned(edges.select("src", "dst"), "src")
-    labels = edges.sparkSession.createDataFrame(
+    seed = edges.sparkSession.createDataFrame(
         [(source, 0)], "node BIGINT, distance BIGINT"
     )
-    frontier = labels.select("node")
-    for d in range(1, max_depth + 1):
-        reached = (
+
+    def _expand(frontier: DataFrame, reached: DataFrame, d: int) -> DataFrame:
+        new = (
             edges.join(frontier, edges.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = reached.join(labels, "node", "left_anti").select(
+        return new.join(reached, "node", "left_anti").select(
             "node", F.lit(d).cast("long").alias("distance")
         )
-        # frontier size from an observe metric gathered during the same
-        # checkpoint job — no separate count action per level
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        new = new.observe(obs, F.count("*").alias("n")).localCheckpoint(eager=True)
-        if obs.get["n"] == 0:
-            break
-        labels = labels.unionByName(new)
-        frontier = new.select("node")
+    labels = frontier_fixpoint(seed, _expand, max_rounds=max_depth)
     return finalize_iterative(labels, edges)
 
 
@@ -215,47 +208,34 @@ def bellman_ford(edges: DataFrame, source: int, rounds: int) -> DataFrame:
 def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
     """Min-label propagation with path-halving over an undirected graph
     (canonical u<v edges). Returns (node, component) where component is
-    the minimum node id reachable. Converges in O(log diameter) rounds.
-
-    Convergence is detected with ``Dataset.observe`` metrics: the
-    changed-label count is aggregated DURING the same job that
-    materializes the round's localCheckpoint, so each round runs exactly
-    ONE job — no separate driver-synchronized count() action (the
-    at-scale fix for the extra job per round a recompute-based check
-    would cost)."""
-    from pyspark.sql import Observation
-
+    the minimum node id reachable. Converges in O(log diameter) rounds;
+    each round is one checkpoint job whose observed changed-label count
+    stops the loop (:func:`~cartography_spark.operators.iterate.label_fixpoint`)."""
     sym = _persist_copartitioned(symmetrize(edges, "u", "v"), "src")
     labels = sym.select("src").distinct().select(F.col("src").alias("node"), F.col("src").alias("comp"))
+
+    def _hop(lbls: DataFrame) -> DataFrame:
+        # Min over neighbours' labels (and own); carry the previous
+        # label through so the changed-count is a row-local predicate.
+        nbr = (
+            sym.join(lbls, sym.src == lbls.node)
+            .groupBy("dst")
+            .agg(F.min("comp").alias("nmin"))
+            .select(F.col("dst").alias("node"), "nmin")
+        )
+        stepped = lbls.join(nbr, "node", "left").select(
+            "node",
+            F.least("comp", F.coalesce("nmin", "comp")).alias("newc"),
+            F.col("comp").alias("prev"),
+        )
+        # Path-halving: jump each label through its parent's label.
+        parent = stepped.select(F.col("node").alias("p_node"), F.col("newc").alias("p_comp"))
+        return stepped.join(parent, stepped.newc == parent.p_node, "left").select(
+            "node", F.least("newc", F.coalesce("p_comp", "newc")).alias("comp"), "prev"
+        )
+
     try:
-        for _ in range(max_iterations):
-            # Min over neighbours' labels (and own); carry the previous
-            # label through so the changed-count is a row-local predicate.
-            nbr = (
-                sym.join(labels, sym.src == labels.node)
-                .groupBy("dst")
-                .agg(F.min("comp").alias("nmin"))
-                .select(F.col("dst").alias("node"), "nmin")
-            )
-            stepped = labels.join(nbr, "node", "left").select(
-                "node",
-                F.least("comp", F.coalesce("nmin", "comp")).alias("newc"),
-                F.col("comp").alias("prev"),
-            )
-            # Path-halving: jump each label through its parent's label.
-            parent = stepped.select(F.col("node").alias("p_node"), F.col("newc").alias("p_comp"))
-            halved = (
-                stepped.join(parent, stepped.newc == parent.p_node, "left")
-                .select("node", F.least("newc", F.coalesce("p_comp", "newc")).alias("comp"), "prev")
-            )
-            obs = Observation()
-            halved = halved.observe(
-                obs, F.count_if(F.col("comp") != F.col("prev")).alias("changed")
-            )
-            halved = halved.localCheckpoint(eager=True)  # one job: materialize + metric
-            labels = halved.drop("prev")
-            if obs.get["changed"] == 0:
-                break
+        labels = label_fixpoint(labels, _hop, max_iterations, label="comp")
     finally:
         sym.unpersist()
     return labels
@@ -297,9 +277,7 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 3, checkpoint_every: int = 4
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Deterministic synchronous label-propagation community detection
     over an already-symmetrized directed edge list (every node appears as
     a src). label0(v) = v; each round every node adopts the most frequent
@@ -317,9 +295,9 @@ def label_propagation(
     -> ~2.7 s for the single-exchange shape). The argmax is
     ``max_by(label, (cnt, -label))`` — a mergeable aggregate — instead
     of a row_number window, so no per-group sort materializes. Lineage is
-    truncated every ``checkpoint_every`` rounds: each eager
-    localCheckpoint is a full materialization barrier, so at small round
-    counts skipping it is ~40% wall-clock (measured at sf0.1), while
+    truncated every ``LPA_CHECKPOINT_EVERY`` (4) rounds: each eager
+    localCheckpoint is a full materialization barrier, so at the registry's
+    3 rounds skipping it is ~40% wall-clock (measured at sf0.1), while
     long runs still get bounded plans (iterative-plan pattern shared
     with connected_components above).
     """
@@ -345,7 +323,7 @@ def label_propagation(
             )
             .select(F.col("src").alias("node"), "label")
         )
-        if checkpoint_every and (r + 1) % checkpoint_every == 0 and r + 1 < rounds:
+        if (r + 1) % LPA_CHECKPOINT_EVERY == 0 and r + 1 < rounds:
             labels = labels.localCheckpoint(eager=True)
     # session mode: checkpoint bounds the returned plan and the edge cache
     # is released; oneshot mode skips the extra materialization barrier
@@ -572,16 +550,12 @@ def hits_exact(
     side is persisted co-partitioned on src (hub join key); the auth join
     probes the same cache (one extra shuffle per round, same as the
     textbook message-passing dataflow). The renorm divisor ``max(a)`` is
-    read from a ``Dataset.observe`` metric gathered DURING the half-step's
-    checkpoint job — so each half-step runs exactly ONE job and the
-    division is a narrow map over the checkpointed rows (no scalar
-    broadcast join, no second aggregate job; same trick as
-    connected_components' convergence counter). Reference delegates all
+    observed by the half-step's own checkpoint job (:func:`round_barrier`),
+    so the division is a narrow map over the checkpointed rows — no scalar
+    broadcast join, no second aggregate job. Reference delegates all
     graph analytics to Neo4j (SURVEY §2.3); this is the Spark-native
     link-analysis companion to pagerank_exact.
     """
-    from pyspark.sql import Observation
-
     if iterations < 1:
         raise ValueError(f"hits_exact requires iterations >= 1, got {iterations}")
     e = _persist_copartitioned(edges.select("src", "dst"), "src")
@@ -597,9 +571,7 @@ def hits_exact(
             .agg(F.sum("h" if val == "a" else "a").alias(val))
             .select(F.col("dst" if val == "a" else "src").alias("node"), val)
         )
-        obs = Observation()
-        raw = raw.observe(obs, F.max(val).alias("m")).localCheckpoint(eager=True)
-        m = obs.get["m"]
+        raw, m = round_barrier(raw, F.max(val))
         if m is None:  # empty frontier (no edges): propagate the empty frame
             return raw
         return raw.select("node", F.expr(f"({val} * {scale}) div {int(m)}").alias(val))

@@ -15,6 +15,21 @@ def test_closure_empty_edges(spark):
     assert transitive_closure(empty, max_hops=3, include_zero=True).count() == 0
 
 
+def test_closure_zero_and_negative_hops(spark):
+    """``*0..0`` reaches only the vertices themselves; a negative bound is
+    a caller error, not an empty pattern."""
+    import pytest
+
+    from cartography_spark.operators.closure import transitive_closure
+
+    edges = spark.createDataFrame([("1", "2"), ("2", "3")], "src_id string, dst_id string")
+    got = {tuple(r) for r in transitive_closure(edges, max_hops=0, include_zero=True).collect()}
+    assert got == {("1", "1", 0), ("2", "2", 0), ("3", "3", 0)}
+    assert transitive_closure(edges, max_hops=0).count() == 0
+    with pytest.raises(ValueError):
+        transitive_closure(edges, max_hops=-1)
+
+
 def test_upsert_empty_batch_is_noop(spark):
     from cartography_spark.catalog import GraphCatalog
     from cartography_spark.operators.upsert import load
@@ -53,12 +68,24 @@ def test_exact_dedup_null_text_groups_together(spark):
 
 
 def test_cluster_min_label_no_pairs(spark):
-    from cartography_spark.operators.dedup import cluster_min_label
+    """No pairs (or memberships), or a zero round bound: every vertex is
+    its own cluster."""
+    from cartography_spark.operators.dedup import cluster_min_label, cluster_min_label_bipartite
 
     pairs = spark.createDataFrame([], "a long, b long")
+    mem = spark.createDataFrame([], "doc_id long, bucket string")
     verts = spark.createDataFrame([(1,), (2,)], "doc_id long")
-    got = {(r.doc_id, r.cluster, r.keep) for r in cluster_min_label(pairs, verts, 2).collect()}
-    assert got == {(1, 1, True), (2, 2, True)}
+    singletons = {(1, 1, True), (2, 2, True)}
+    for max_iter in (2, 0):
+        for got in (
+            cluster_min_label(pairs, verts, max_iter),
+            cluster_min_label_bipartite(mem, verts, max_iter),
+        ):
+            assert {(r.doc_id, r.cluster, r.keep) for r in got.collect()} == singletons
+    # max_iter=0 runs no round, even when there are pairs to follow
+    pairs = spark.createDataFrame([(1, 2)], "a long, b long")
+    got = {(r.doc_id, r.cluster, r.keep) for r in cluster_min_label(pairs, verts, 0).collect()}
+    assert got == singletons
 
 
 def test_jsonl_roundtrip_with_split_partitions(spark, tmp_path):
