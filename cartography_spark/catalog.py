@@ -15,15 +15,28 @@ index seeks, SURVEY §4).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cartography_spark.session import run_concurrently
 
 EdgeKey = tuple[str, str, str]  # (src_label, rel_label, dst_label)
 
 ENGINE_NODE_COLS = ("id", "firstseen", "lastupdated")
 ENGINE_EDGE_COLS = ("src_id", "dst_id", "firstseen", "lastupdated")
+
+
+def _table_dirs(path: str) -> list[str]:
+    """Sorted table directory names under ``path``, skipping the ``_``- and
+    ``.``-prefixed entries (``_SUCCESS``, ``_temporary``, ``.DS_Store``) that
+    Spark's own file index treats as hidden."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
 
 
 @dataclass
@@ -82,30 +95,37 @@ class GraphCatalog:
 
     def save(self, path: str) -> None:
         """Write every table as parquet under ``path`` (tenant-partitioned
-        when a partition column is registered)."""
+        when a partition column is registered). The writes run concurrently;
+        a failed write is raised after the others finish."""
+        writes = []
         for label, df in self.nodes.items():
             w = df.write.mode("overwrite")
             part = self.partition_cols.get(label)
             if part and part in df.columns:
                 w = w.partitionBy(part)
-            w.parquet(f"{path}/nodes/{label}")
+            writes.append(partial(w.parquet, f"{path}/nodes/{label}"))
         for (sl, rl, dl), df in self.edges.items():
-            df.write.mode("overwrite").parquet(f"{path}/edges/{sl}__{rl}__{dl}")
+            writes.append(partial(df.write.mode("overwrite").parquet, f"{path}/edges/{sl}__{rl}__{dl}"))
+        run_concurrently(self.spark, writes)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> GraphCatalog:
-        import os
-
+        """Read back a catalog written by ``save``. Tables are registered in
+        sorted name order; their reads (and schema inference) run
+        concurrently."""
+        node_dir, edge_dir = f"{path}/nodes", f"{path}/edges"
+        labels, names = _table_dirs(node_dir), _table_dirs(edge_dir)
+        frames = run_concurrently(
+            spark,
+            [partial(spark.read.parquet, f"{node_dir}/{label}") for label in labels]
+            + [partial(spark.read.parquet, f"{edge_dir}/{name}") for name in names],
+        )
         cat = cls(spark)
-        node_dir = f"{path}/nodes"
-        if os.path.isdir(node_dir):
-            for label in os.listdir(node_dir):
-                cat.nodes[label] = spark.read.parquet(f"{node_dir}/{label}")
-        edge_dir = f"{path}/edges"
-        if os.path.isdir(edge_dir):
-            for name in os.listdir(edge_dir):
-                sl, rl, dl = name.split("__")
-                cat.edges[(sl, rl, dl)] = spark.read.parquet(f"{edge_dir}/{name}")
+        for label, df in zip(labels, frames):
+            cat.nodes[label] = df
+        for name, df in zip(names, frames[len(labels):]):
+            sl, rl, dl = name.split("__")
+            cat.edges[(sl, rl, dl)] = df
         return cat
 
     # -- test helpers (ports of reference integration-test asserts,

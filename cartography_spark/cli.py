@@ -180,7 +180,7 @@ def cmd_rules_rollup(args: argparse.Namespace) -> int:
     """Per-(framework, requirement) compliance rollup over executed rules
     (plans/rules.py framework_rollup; the `frameworks` listing extended
     with runners.py:121-134 compliance math, batched execution)."""
-    from cartography_spark.plans.rules import framework_rollup, run_rules_batched
+    from cartography_spark.plans.rules import framework_rollup, run_rules
     from cartography_spark.plans.rules_corpus import full_rule_set
 
     spark = get_spark("cartography-spark-rules")
@@ -195,7 +195,7 @@ def cmd_rules_rollup(args: argparse.Namespace) -> int:
         print("no framework-mapped rules available", file=sys.stderr)
         return 1
     rows = (
-        framework_rollup(run_rules_batched(rules, cat))
+        framework_rollup(run_rules(rules, cat))
         .orderBy("framework", "requirement")
         .collect()
     )

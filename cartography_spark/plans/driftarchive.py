@@ -111,14 +111,19 @@ def get_states(
 
 def load_state(spark: SparkSession, root: str, name: str, alias_or_file: str) -> DriftState:
     """Load a state by shortcut alias or filename into a DriftState whose
-    results DataFrame mirrors the stored flat-string rows."""
+    results DataFrame mirrors the stored flat-string rows. The rows go to
+    the JVM as one Arrow table, so the frame is a driver-local relation and
+    scanning it starts no Python worker."""
+    import pyarrow as pa
+
     qdir = os.path.join(root, name)
     fname = resolve_shortcut(qdir, alias_or_file)
     payload = _load_json(os.path.join(qdir, fname))
     props = payload["properties"]
     schema = ", ".join(f"`{p}` string" for p in props)
-    rows = [tuple(r) for r in payload["results"]]
-    df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
+    columns = list(zip(*payload["results"])) or [()] * len(props)
+    table = pa.table([pa.array(c, pa.string()) for c in columns], names=props)
+    df = spark.createDataFrame(table, schema)
     return DriftState(
         name=payload["name"],
         properties=tuple(props),

@@ -664,11 +664,11 @@ def q_permission_statement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rules_library_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.plans.inventory_lifecycle import base_catalog
-    from cartography_spark.plans.rules import compliance_summary, run_rules_batched
+    from cartography_spark.plans.rules import compliance_summary, run_rules
     from cartography_spark.plans.rules_library import build_rules
 
     cat = base_catalog(spark, sf_dir)
-    results = run_rules_batched(build_rules(spark, sf_dir), cat)
+    results = run_rules(build_rules(spark, sf_dir), cat)
     return compliance_summary([fr for r in results for fr in r.facts])
 
 

@@ -256,11 +256,11 @@ def q_rows_ingest_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rules_extended_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.plans.inventory_lifecycle import base_catalog
-    from cartography_spark.plans.rules import compliance_summary, run_rules_batched
+    from cartography_spark.plans.rules import compliance_summary, run_rules
     from cartography_spark.plans.rules_library import build_extended_rules
 
     cat = base_catalog(spark, sf_dir)
-    results = run_rules_batched(build_extended_rules(spark, sf_dir), cat)
+    results = run_rules(build_extended_rules(spark, sf_dir), cat)
     return compliance_summary([fr for r in results for fr in r.facts])
 
 
@@ -584,11 +584,11 @@ _CORPUS_ORACLE = """
 )
 def q_rules_corpus_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.plans.inventory_lifecycle import base_catalog
-    from cartography_spark.plans.rules import compliance_summary, run_rules_batched
+    from cartography_spark.plans.rules import compliance_summary, run_rules
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
-    results = run_rules_batched(build_corpus_rules(spark, sf_dir), cat)
+    results = run_rules(build_corpus_rules(spark, sf_dir), cat)
     return compliance_summary([fr for r in results for fr in r.facts])
 
 
@@ -671,14 +671,14 @@ _FRAMEWORK_MAPPING_VALUES = """
 )
 def q_rules_framework_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.plans.inventory_lifecycle import base_catalog
-    from cartography_spark.plans.rules import framework_rollup, run_rules_batched
+    from cartography_spark.plans.rules import framework_rollup, run_rules
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
-    # batched runner: one unioned findings job + one cached count per
-    # distinct label, instead of the reference's ~2-actions-per-rule
-    # sequential loop (results identical — run_rules is the parity form)
-    results = run_rules_batched(build_corpus_rules(spark, sf_dir), cat)
+    # batched runner: one unioned findings job + one unioned totals job,
+    # instead of the reference's ~2-actions-per-rule sequential loop
+    # (results identical to per-fact Fact.run)
+    results = run_rules(build_corpus_rules(spark, sf_dir), cat)
     return framework_rollup(results)
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
+from cartography_spark.session import run_concurrently
 
 
 @dataclass(frozen=True)
@@ -33,7 +34,7 @@ class Fact:
     # total-asset counter; defaults to counting the asset label's node table
     count_query: Callable[[GraphCatalog], int] | None = None
     # optional DataFrame form of count_query — a 1-row (n BIGINT) frame
-    # computing the SAME total. When present, run_rules_batched folds it
+    # computing the SAME total. When present, run_rules folds it
     # into the single unioned counts job instead of paying a separate
     # driver action per custom counter (guide §2.4: one job, not N).
     count_df: Callable[[GraphCatalog], DataFrame] | None = None
@@ -142,9 +143,6 @@ class Rule:
                 return fact
         return None
 
-    def run(self, catalog: GraphCatalog) -> list[FactResult]:
-        return [f.run(catalog) for f in self.facts]
-
 
 @dataclass
 class RuleResult:
@@ -180,25 +178,9 @@ class RuleResult:
 
 
 def run_rules(rules: list[Rule] | tuple[Rule, ...], catalog: GraphCatalog) -> list[RuleResult]:
-    """Execute rules sequentially (reference rules/runners.py:188-340)."""
-    return [
-        RuleResult(
-            rule_id=rule.rule_id,
-            rule_name=rule.name,
-            rule_description=rule.description,
-            facts=rule.run(catalog),
-            rule_tags=rule.tags,
-            rule_frameworks=rule.frameworks,
-        )
-        for rule in rules
-    ]
-
-
-def run_rules_batched(
-    rules: list[Rule] | tuple[Rule, ...], catalog: GraphCatalog
-) -> list[RuleResult]:
-    """Spark-first batched rule execution: identical results to
-    :func:`run_rules`, a fraction of the driver round-trips.
+    """Spark-first batched rule execution: the same per-fact counters as
+    running each :meth:`Fact.run` in turn, a fraction of the driver
+    round-trips.
 
     The reference runner (rules/runners.py:188-340) executes rules
     sequentially — each fact is its own query plus its own count query,
@@ -207,16 +189,16 @@ def run_rules_batched(
     distinct-failing count comes back from a single groupBy job; total-
     asset counts are computed once per DISTINCT asset label / count
     query (rules share labels, the sequential form re-counts them per
-    rule). 23 corpus rules: ~50 sequential actions -> 1 union job + ~7
-    cached counts. At scale the union job reads each fact's inputs in
-    one pass and the per-fact aggregate is map-side combinable on the
-    (fact_id, asset) pairs.
+    rule) in one unioned totals job that runs alongside it. 23 corpus
+    rules: ~50 sequential actions -> 2 concurrent jobs. At scale the
+    union job reads each fact's inputs in one pass and the per-fact
+    aggregate is map-side combinable on the (fact_id, asset) pairs.
 
     Validation contract preserved: every fact's result frame must carry
     its declared ``asset_id_field`` (model.py:414-462), enforced before
     the union so a schema break still names the offending fact.
     """
-    facts = [(rule, fact) for rule in rules for fact in rule.facts]
+    facts = [(i, fact) for i, rule in enumerate(rules) for fact in rule.facts]
     # failing counts are keyed by fact_id across the whole union — a duplicate
     # fact_id in two rules would silently merge their findings into one count
     fact_ids = [fact.fact_id for _, fact in facts]
@@ -288,6 +270,8 @@ def run_rules_batched(
         # (a NULL asset_id is one set element) — countDistinct drops NULLs, so
         # count distinct groups instead: groupBy collapses all NULLs into one
         # group, and both aggregates are map-side combinable
+        if tagged is None:
+            return {}
         return {
             r["__fact"]: r["n"]
             for r in tagged.groupBy("__fact", "__asset")
@@ -298,35 +282,13 @@ def run_rules_batched(
         }
 
     def _collect_totals() -> dict[str, int]:
+        if counts is None:
+            return {}
         return {r["__lbl"]: r["n"] for r in counts.collect()}
 
-    # Overlap the two independent collect jobs (guide §2.6): the counts job
-    # is a handful of tiny per-label aggregates whose stages back-fill
-    # executors left idle by the union job's straggler tail instead of
-    # paying their scheduling latency sequentially after it. Results are
-    # byte-identical — the jobs share no state and the dicts are merged
-    # the same way afterwards.
-    failing: dict[str, int] = {}
-    merged_total: dict[str, int] = {}
-    jobs = [
-        j for j in (
-            ("failing", _collect_failing) if tagged is not None else None,
-            ("totals", _collect_totals) if counts is not None else None,
-        ) if j is not None
-    ]
-    if len(jobs) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            done = {name: pool.submit(fn) for name, fn in jobs}
-        failing = done["failing"].result() if "failing" in done else {}
-        merged_total = done["totals"].result() if "totals" in done else {}
-    elif jobs:
-        name, fn = jobs[0]
-        if name == "failing":
-            failing = fn()
-        else:
-            merged_total = fn()
+    # The two jobs are independent: the counts job's tiny per-label stages
+    # back-fill executors left idle by the union job's straggler tail.
+    failing, merged_total = run_concurrently(catalog.spark, [_collect_failing, _collect_totals])
     label_total = {
         k.removeprefix("label:"): v
         for k, v in merged_total.items()
@@ -346,11 +308,11 @@ def run_rules_batched(
             return fn_total[key]
         return label_total[fact.asset_label]
 
-    by_rule: dict[str, list[FactResult]] = {}
-    for (rule, fact), fact_df in zip(facts, fact_dfs):
+    by_rule: list[list[FactResult]] = [[] for _ in rules]
+    for (i, fact), fact_df in zip(facts, fact_dfs):
         n_fail = failing.get(fact.fact_id, 0)
         total = total_of(fact)
-        by_rule.setdefault(rule.rule_id, []).append(
+        by_rule[i].append(
             FactResult(
                 fact=fact,
                 findings=fact_df,
@@ -364,11 +326,11 @@ def run_rules_batched(
             rule_id=rule.rule_id,
             rule_name=rule.name,
             rule_description=rule.description,
-            facts=by_rule.get(rule.rule_id, []),
+            facts=rule_facts,
             rule_tags=rule.tags,
             rule_frameworks=rule.frameworks,
         )
-        for rule in rules
+        for rule, rule_facts in zip(rules, by_rule)
     ]
 
 

@@ -48,7 +48,7 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
     def n_event_users(c: GraphCatalog) -> int:
         return events().select("user_id").distinct().count()
 
-    # DataFrame forms of the custom counters (same totals): run_rules_batched
+    # DataFrame forms of the custom counters (same totals): run_rules
     # folds these into its single unioned counts job instead of paying one
     # driver action per counter (rules.py: merged counts collect).
 

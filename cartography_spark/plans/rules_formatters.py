@@ -4,16 +4,21 @@ per-rule sections with fact compliance lines, then an execution summary
 with totals and a compliance percentage.
 
 Findings DataFrames are materialized with ``limit(max_findings)`` so the
-report never collects an unbounded result to the driver.
+report never collects an unbounded result to the driver; the per-fact
+collects are independent and run concurrently.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import asdict, is_dataclass
+from functools import partial
 from typing import Any
 
-from cartography_spark.plans.rules import RuleResult
+from pyspark.sql import Row
+
+from cartography_spark.plans.rules import FactResult, RuleResult
+from cartography_spark.session import run_concurrently
 
 GREEN, RED, CYAN, GREY, RESET = "\033[32m", "\033[31m", "\033[36m", "\033[90m", "\033[0m"
 
@@ -33,7 +38,22 @@ def to_serializable(obj: Any) -> Any:
     return str(obj)
 
 
-def _result_payload(r: RuleResult, max_findings: int) -> dict:
+def _collect_findings(results: list[RuleResult], max_findings: int) -> list[list[list[Row]]]:
+    """``findings.limit(max_findings).collect()`` of every fact, one list
+    per rule in rule and fact order; no job at all when ``max_findings``
+    is 0."""
+    facts = [fr for r in results for fr in r.facts]
+    if not facts or max_findings == 0:
+        return [[[] for _ in r.facts] for r in results]
+
+    def collect(fr: FactResult) -> list[Row]:
+        return fr.findings.limit(max_findings).collect()
+
+    rows = iter(run_concurrently(facts[0].findings.sparkSession, [partial(collect, fr) for fr in facts]))
+    return [[next(rows) for _ in r.facts] for r in results]
+
+
+def _result_payload(r: RuleResult, findings: list[list[Row]]) -> dict:
     return {
         "rule_id": r.rule_id,
         "rule_name": r.rule_name,
@@ -56,25 +76,24 @@ def _result_payload(r: RuleResult, max_findings: int) -> dict:
                 "failing": fr.failing_assets,
                 "passing": fr.passing_assets,
                 "total": fr.total_assets,
-                "findings": [
-                    to_serializable(row) for row in fr.findings.limit(max_findings).collect()
-                ],
+                "findings": [to_serializable(row) for row in rows],
             }
-            for fr in r.facts
+            for fr, rows in zip(r.facts, findings)
         ],
     }
 
 
 def format_json(results: list[RuleResult], max_findings: int = 100) -> str:
     """JSON report: one object per rule (reference formatters.py:227-229)."""
-    return json.dumps([_result_payload(r, max_findings) for r in results], indent=2)
+    findings = _collect_findings(results, max_findings)
+    return json.dumps([_result_payload(r, f) for r, f in zip(results, findings)], indent=2)
 
 
 def format_text(results: list[RuleResult], color: bool = False, max_findings: int = 0) -> str:
     """Human-readable report (reference formatters.py:230-260 layout)."""
     g, r_, c, gr, z = (GREEN, RED, CYAN, GREY, RESET) if color else ("",) * 5
     lines: list[str] = []
-    for res in results:
+    for res, res_findings in zip(results, _collect_findings(results, max_findings)):
         lines.append("=" * 60)
         lines.append(f"RULE - {res.rule_name} [{res.rule_id}]")
         if res.rule_description:
@@ -82,16 +101,15 @@ def format_text(results: list[RuleResult], color: bool = False, max_findings: in
         if res.rule_frameworks:
             fws = ", ".join(f"{f.short_name}:{f.requirement}" for f in res.rule_frameworks)
             lines.append(f"Frameworks: {fws}")
-        for fr in res.facts:
+        for fr, rows in zip(res.facts, res_findings):
             pct = (fr.passing_assets / fr.total_assets * 100) if fr.total_assets else 100.0
             lines.append(
                 f"  {fr.fact.fact_id}: {r_}{fr.failing_assets} failing{z} / "
                 f"{g}{fr.passing_assets} passing{z} / {fr.total_assets} total "
                 f"({pct:.1f}% compliant)"
             )
-            if max_findings:
-                for row in fr.findings.limit(max_findings).collect():
-                    lines.append(f"    - {to_serializable(row)}")
+            for row in rows:
+                lines.append(f"    - {to_serializable(row)}")
     total_facts = sum(r.total_facts for r in results)
     total_assets = sum(r.total_assets for r in results)
     total_passing = sum(r.total_passing for r in results)

@@ -8,8 +8,10 @@ handling), adaptive broadcast selection, and Arrow for any Pandas-UDF path.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 # Engine session mode. "session" (default) = long-lived process running many
@@ -42,6 +44,28 @@ def finalize_iterative(df, *caches):
         for c in caches:
             c.unpersist()
     return df
+
+
+def run_concurrently(spark: SparkSession, thunks) -> list:
+    """Run independent driver actions on a thread pool of
+    ``defaultParallelism`` workers and return their results in submission
+    order. Each action is a zero-argument callable; small actions issued one
+    after another each pay the full job latency, issued together their
+    one-task stages share the executors.
+
+    Each thread inherits the caller's local properties (job group, job
+    description, scheduler pool) and job tags as they were at the call. Every action
+    runs to completion before the first error, in submission order, is
+    re-raised."""
+    thunks = list(thunks)
+    if not thunks:
+        return []
+    workers = min(len(thunks), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # one wrap per action: each gets its own copy of the properties,
+        # which the jobs it runs then mutate (the SQL execution id)
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in thunks]
+    return [f.result() for f in futures]
 
 
 def shuffle_partition_count(spark: SparkSession) -> int:

@@ -292,3 +292,100 @@ def test_catalog_save_load(spark, sf_dir, tmp_path):
     assert set(cat2.nodes) == set(cat.nodes)
     assert set(cat2.edges) == set(cat.edges)
     assert cat2.node("Supplier").count() == cat.node("Supplier").count()
+
+
+def _as_strings(df, cols):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*[F.col(c).cast("string") for c in cols]).collect())
+
+
+def test_catalog_round_trip_matches_table_reads(spark, tmp_path):
+    """sf0.01 save -> load: every table comes back in sorted order, with the
+    schema (column order included) of a plain ``spark.read.parquet`` of its
+    directory and the rows of the saved catalog; the region-partitioned
+    Supplier carries ``region_id`` as its last column."""
+    from tests.conftest import SF_CORRECT
+
+    cat = build_catalog(spark, SF_CORRECT, T1)
+    assert cat.partition_cols["Supplier"] == "region_id"
+    path = str(tmp_path / "wh")
+    cat.save(path)
+    loaded = GraphCatalog.load(spark, path)
+    assert list(loaded.nodes) == sorted(cat.nodes)
+    assert list(loaded.edges) == sorted(cat.edges)
+    tables = [(df, cat.nodes[label], f"{path}/nodes/{label}") for label, df in loaded.nodes.items()]
+    tables += [(df, cat.edges[k], f"{path}/edges/{'__'.join(k)}") for k, df in loaded.edges.items()]
+    for got, saved, table_dir in tables:
+        assert got.schema == spark.read.parquet(table_dir).schema, table_dir
+        assert sorted(got.columns) == sorted(saved.columns), table_dir
+        assert _as_strings(got, got.columns) == _as_strings(saved, got.columns), table_dir
+    assert loaded.node("Supplier").columns[-1] == "region_id"
+
+
+def test_catalog_load_skips_hidden_entries(spark, tmp_path):
+    """Spark's own markers (``_SUCCESS``, ``_temporary``) and dot files in
+    ``nodes/`` or ``edges/`` are not tables."""
+    cat = GraphCatalog(spark)
+    cat.set_node("B", spark.createDataFrame([("b", 1, 1)], "id string, firstseen long, lastupdated long"))
+    cat.set_node("A", spark.createDataFrame([("a", 1, 1)], "id string, firstseen long, lastupdated long"))
+    cat.set_edge(
+        ("A", "TO", "B"),
+        spark.createDataFrame([("a", "b", 1, 1)], "src_id string, dst_id string, firstseen long, lastupdated long"),
+    )
+    path = tmp_path / "wh"
+    cat.save(str(path))
+    for sub in ("nodes", "edges"):
+        (path / sub / "_SUCCESS").write_text("")
+        (path / sub / ".DS_Store").write_text("")
+        (path / sub / "_temporary").mkdir()
+    loaded = GraphCatalog.load(spark, str(path))
+    assert list(loaded.nodes) == ["A", "B"]
+    assert list(loaded.edges) == [("A", "TO", "B")]
+    assert loaded.edge("A", "TO", "B").collect()[0].dst_id == "b"
+
+
+def test_catalog_save_raises_failed_write_after_the_others(spark, tmp_path):
+    """One table whose write fails: ``save`` raises that error once the
+    other writes have finished, and they are complete on disk."""
+    import os
+    import threading
+
+    ok = spark.range(50).select(
+        F.col("id").cast("string").alias("id"), F.lit(1).alias("firstseen"), F.lit(1).alias("lastupdated")
+    )
+    cat = GraphCatalog(spark)
+    cat.set_node("Broken", ok.withColumn("bad", F.raise_error(F.concat(F.lit("broken-"), F.col("id")))))
+    for label in ("Good1", "Good2", "Good3"):
+        cat.set_node(label, ok)
+    path = str(tmp_path / "wh")
+    errors = []
+
+    def save():
+        try:
+            cat.save(path)
+        except Exception as e:  # noqa: BLE001 — the test inspects it below
+            errors.append(e)
+
+    t = threading.Thread(target=save, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "save hung on a failed write"
+    assert len(errors) == 1 and "broken-" in str(errors[0])
+    for label in ("Good1", "Good2", "Good3"):
+        assert os.path.isfile(f"{path}/nodes/{label}/_SUCCESS")
+        assert spark.read.parquet(f"{path}/nodes/{label}").count() == 50
+
+
+def test_catalog_save_jobs_carry_the_callers_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    cat = GraphCatalog(spark)
+    for label in ("A", "B", "C"):
+        cat.set_node(label, spark.createDataFrame([("x", 1, 1)], "id string, firstseen long, lastupdated long"))
+    sc.setJobGroup("catalog-save-test", "save with a job group")
+    try:
+        cat.save(str(tmp_path / "wh"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("catalog-save-test")) >= 3

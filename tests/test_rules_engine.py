@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from cartography_spark.plans.frameworks import framework_coverage, fw
 from cartography_spark.plans.rules import Framework, run_rules
-from cartography_spark.plans.rules_formatters import format_json, format_text
+from cartography_spark.plans.rules_formatters import format_json, format_text, to_serializable
 from cartography_spark.plans.rules_library import CATALOG_RULES, build_rules
 from cartography_spark.plans.inventory_lifecycle import base_catalog
 
@@ -146,23 +146,22 @@ def test_framework_rollup_math(spark, sf_dir):
 
 
 def test_batched_runner_equals_sequential(spark, sf_dir):
-    """run_rules_batched must produce the exact per-fact counters the
-    sequential reference-parity runner does, rule by rule."""
-    from cartography_spark.plans.rules import run_rules, run_rules_batched
+    """run_rules must produce the exact per-fact counters that running each
+    fact on its own (the reference-parity Fact.run) does, rule by rule."""
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
     rules = build_corpus_rules(spark, sf_dir)
-    seq = {
-        fr.fact.fact_id: (fr.failing_assets, fr.passing_assets, fr.total_assets)
+    seq = [
+        (rule.rule_id, [(fr.fact.fact_id, fr.failing_assets, fr.passing_assets, fr.total_assets)
+                        for fr in (fact.run(cat) for fact in rule.facts)])
+        for rule in rules
+    ]
+    bat = [
+        (r.rule_id, [(fr.fact.fact_id, fr.failing_assets, fr.passing_assets, fr.total_assets)
+                     for fr in r.facts])
         for r in run_rules(rules, cat)
-        for fr in r.facts
-    }
-    bat = {
-        fr.fact.fact_id: (fr.failing_assets, fr.passing_assets, fr.total_assets)
-        for r in run_rules_batched(rules, cat)
-        for fr in r.facts
-    }
+    ]
     assert seq == bat
 
 
@@ -187,7 +186,7 @@ def test_batched_counts_null_asset_ids_like_sequential(spark):
     count NULL as ONE failing asset; the batched distinct-group count must
     agree with the sequential distinct().count() — the ADVICE-flagged
     F.countDistinct would silently drop the NULLs."""
-    from cartography_spark.plans.rules import Fact, Rule, run_rules, run_rules_batched
+    from cartography_spark.plans.rules import Fact, Rule
 
     cat = _null_asset_catalog(spark)
 
@@ -202,8 +201,8 @@ def test_batched_counts_null_asset_ids_like_sequential(spark):
         facts=(Fact(fact_id="f-null", name="n", query=findings,
                     asset_label="Thing", asset_id_field="id"),),
     )
-    seq = run_rules([rule], cat)[0].facts[0]
-    bat = run_rules_batched([rule], cat)[0].facts[0]
+    seq = rule.facts[0].run(cat)
+    bat = run_rules([rule], cat)[0].facts[0]
     # 2 non-null distinct + the NULL group = 3 failing of 6 total
     assert (seq.failing_assets, seq.total_assets) == (3, 6)
     assert (bat.failing_assets, bat.passing_assets, bat.total_assets) == (
@@ -215,7 +214,7 @@ def test_batched_rejects_duplicate_fact_ids(spark):
     would merge two facts' findings — must be rejected up front."""
     import pytest
 
-    from cartography_spark.plans.rules import Fact, Rule, run_rules_batched
+    from cartography_spark.plans.rules import Fact, Rule
 
     cat = _null_asset_catalog(spark)
 
@@ -228,7 +227,55 @@ def test_batched_rejects_duplicate_fact_ids(spark):
                     asset_label="Thing", asset_id_field="id"),),
     )
     with pytest.raises(ValueError, match="duplicate fact_id"):
-        run_rules_batched([mk("r1"), mk("r2")], cat)
+        run_rules([mk("r1"), mk("r2")], cat)
+
+
+def test_rules_sharing_a_rule_id_keep_their_own_facts(spark):
+    """Results are per rule in input order, not keyed by rule_id: two
+    rules with one id each get only their own facts, as Fact.run per rule
+    would give them."""
+    from cartography_spark.plans.rules import Fact, Rule
+
+    cat = _null_asset_catalog(spark)
+
+    def findings(c):
+        return c.spark.createDataFrame([("a",)], "id string")
+
+    mk = lambda fid: Rule(
+        rule_id="r-same", name=fid,
+        facts=(Fact(fact_id=fid, name="n", query=findings,
+                    asset_label="Thing", asset_id_field="id"),),
+    )
+    results = run_rules([mk("f1"), mk("f2")], cat)
+    assert [[fr.fact.fact_id for fr in r.facts] for r in results] == [["f1"], ["f2"]]
+
+
+def test_shipped_rule_sets_have_unique_fact_ids():
+    """run_rules keys failing counts by fact_id and rejects duplicates, so
+    every shipped rule set must keep them unique."""
+    from cartography_spark.plans.rules_corpus import full_rule_set
+
+    for rules in (CATALOG_RULES, full_rule_set(None, "")):
+        fact_ids = [f.fact_id for r in rules for f in r.facts]
+        assert fact_ids and len(fact_ids) == len(set(fact_ids))
+
+
+def test_format_json_keeps_sequential_order(spark, sf_dir):
+    """The concurrent findings collects land in rule, fact and row order of
+    a per-fact sequential ``limit().collect()``."""
+    cat = base_catalog(spark, sf_dir)
+    results = run_rules(CATALOG_RULES, cat)
+    expected = [
+        [r.rule_id, [[fr.fact.fact_id, to_serializable(fr.findings.limit(4).collect())] for fr in r.facts]]
+        for r in results
+    ]
+    got = [
+        [r["rule_id"], [[f["fact_id"], f["findings"]] for f in r["facts"]]]
+        for r in json.loads(format_json(results, max_findings=4))
+    ]
+    assert [rid for rid, _ in got] == [r.rule_id for r in CATALOG_RULES]
+    assert got == json.loads(json.dumps(expected))
+
 
 
 def test_framework_rollup_skips_empty_facts_result(spark):
